@@ -11,30 +11,31 @@ forests in O(log² n) rounds — independent of graph diameter. (Plain
 min-label propagation was measured needing >25 rounds on a long-chain
 match graph at sf0.1; this converges in ~5.)
 
-Every round is (in the default ``window`` implementation) two window
-shuffle+sort passes over the edge list plus a round-final ``distinct``
-— no joins; see :func:`_round_step` for the implementation knob and
-the A/B history — with ``localCheckpoint`` truncating lineage. The
-final component id is the MIN node id in the component —
-deterministic, unlike the reference's enumeration-order cluster ids
-(SURVEY.md §7.3: tests compare cluster *partitions*, not ids).
+Every round is two window shuffle+sort passes over the edge list plus a
+round-final ``distinct`` — no joins — with ``localCheckpoint``
+truncating lineage. The final component id is the MIN node id in the
+component — deterministic, unlike the reference's enumeration-order
+cluster ids (SURVEY.md §7.3: tests compare cluster *partitions*, not
+ids). The join-form, pinned-exchange and fused-dedup star variants this
+design was measured against, and the staged ingest, are recorded in
+README.md and OPTIMIZATION_r11.md/OPTIMIZATION_r12.md.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
 def _release_checkpoint(df: DataFrame) -> None:
     """Best-effort unpersist of a ``localCheckpoint`` result's backing
-    RDD blocks. Superseded round checkpoints used to stay persisted
-    until the JVM's ContextCleaner got around to them, which at the
-    x100 probe scale (100M-edge rounds) held multiple full edge-set
-    copies on the heap at once — the measured GC-pressure variance in
-    the century probe. A non-LogicalRDD plan (or a Connect session,
-    where the JVM internals are unreachable) is silently skipped: the
-    call is an optimization, never a correctness dependency."""
+    RDD blocks, so superseded round checkpoints do not stay on the heap
+    until the JVM's ContextCleaner gets to them (at 100M edges that held
+    several full edge-set copies at once). A non-LogicalRDD plan (or a
+    Connect session, where the JVM internals are unreachable) is
+    silently skipped: the call is an optimization, never a correctness
+    dependency."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
@@ -71,61 +72,16 @@ def _jvm_max_heap(spark) -> "int | None":
         return None
 
 
-# pin the per-star exchange only on BIG graphs: bisected a 51.6 -> 43.6 s
-# win at 10M edges (fresh JVM per sample) and a wash at 1M (mins 7.8-11.1 s
-# straddle both arms), while on micro-batch fold graphs (tens of edges) the
-# extra exchange materializes ~5 more AQE jobs per fold — pure driver
-# round-trip latency on the streaming-ER critical path, pinned by
-# test_incremental_fold_driver_round_trips_are_bounded
-PIN_EXCHANGE_ABOVE_EDGES = 2_000_000
-
-
-def _large_star(e: DataFrame, pin: bool) -> DataFrame:
+def _large_star_window(e: DataFrame) -> DataFrame:
     """For each node u: connect every strictly-larger neighbor to
     min(N(u) ∪ {u}).
 
-    No ``distinct()`` here: each undirected input edge {x, y} (x < y)
-    survives the ``v > u`` filter exactly once and emits exactly one
-    rewired row (y, m(x)), so the output row count equals the input edge
-    count — no duplicate growth to bound. Small-star's round-final
-    ``distinct`` dedups whatever coincides. Dropping it removes one
-    shuffle per round (measured ~10% per-round saving at sf0.1).
-
-    ``pin`` (decided once from the input edge volume, see
-    ``PIN_EXCHANGE_ABOVE_EDGES``) adds an explicit ``repartition(u)``
-    that pins ONE exchange of the symmetrized edge set for BOTH
-    consumers (the min-aggregation and the join probe side) to reuse —
-    without it each consumer plans its own scan+union of the round
-    checkpoint and its own shuffle toward hashpartitioning(u). Bisected
-    at 10M edges (r6, fresh JVM per sample): 51.6 s min baseline ->
-    43.6 s min with the pinned exchange; a SHUFFLE_HASH hint on the
-    mins side measured a wash on top of it (the per-partition sort of
-    the reused exchange is not the bottleneck), so the join strategy is
-    left to Catalyst/AQE."""
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if pin:
-        sym = sym.repartition(F.col("u"))
-    mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-    mins = mins.select("u", F.least("mv", "u").alias("m"))
-    return (
-        sym.filter(F.col("v") > F.col("u"))
-        .join(mins, on="u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-
-
-def _large_star_window(e: DataFrame) -> DataFrame:
-    """Window-function formulation of :func:`_large_star`: the per-node
-    minimum comes from ``min(v) OVER (PARTITION BY u)`` on the
-    symmetrized set — ONE shuffle+sort per star and ZERO joins, versus
-    the join form's exchange + aggregation + join probe. Same rewiring
-    semantics row-for-row (pinned by test_clustering's impl-equality
-    test). The r7 DEFAULT — see :func:`_round_step` for the
-    interleaved A/B numbers that decided it; ``SPARK_GRAFT_CC_STAR=
-    join`` selects the r6 join form."""
-    from pyspark.sql import Window
-
+    The per-node minimum is ``min(v) OVER (PARTITION BY u)`` on the
+    symmetrized edge set — one shuffle+sort and no join. No ``distinct``
+    here: each undirected input edge {x, y} (x < y) survives the
+    ``v > u`` filter once per copy and emits one rewired row, so the
+    output never outgrows the input; small-star's round-final
+    ``distinct`` dedups whatever coincides."""
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     full = Window.partitionBy("u")
     m = F.least(F.min("v").over(full), F.col("u"))
@@ -138,13 +94,13 @@ def _large_star_window(e: DataFrame) -> DataFrame:
 
 
 def _small_star_window(e: DataFrame) -> DataFrame:
-    """Window-function formulation of :func:`_small_star`: per-node min
-    and the one-self-row-per-node both come out of a single sorted
-    window pass (row_number marks the representative row), so the star
-    costs one shuffle+sort plus the round-final distinct — no join, no
-    separate selfs aggregation."""
-    from pyspark.sql import Window
+    """Direct edges large->small; for each node u connect all of its
+    smaller neighbors (and u itself) to the minimum one.
 
+    The per-node min and the one-self-row-per-node both come out of a
+    single sorted window pass (``row_number`` marks the representative
+    row), so the star costs one shuffle+sort plus the round-final
+    ``distinct`` — no join, no separate selfs aggregation."""
     d = e.select(
         F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
     )
@@ -171,144 +127,11 @@ def _small_star_window(e: DataFrame) -> DataFrame:
     )
 
 
-def _large_star_window_nodistinct(e: DataFrame) -> DataFrame:
-    """:func:`_large_star_window` with INPUT DEDUP fused into the same
-    window pass: the round-final ``distinct`` (a third exchange +
-    pre/post hash aggregates per round in the r7 default) is replaced
-    by a ``lag``-based adjacent-duplicate drop inside each star's
-    existing shuffle+sort. The window gains an ``ORDER BY v`` (the r7
-    form sorted on the partition key alone), under which duplicate
-    ``(u, v)`` rows are adjacent and ``first(v)`` is the partition min
-    for free; each star thereby consumes the DISTINCT edge set while
-    its own output may carry cross-partition duplicates (two centers
-    emitting the same rewired edge), which the NEXT star's dedup
-    absorbs — duplicates never compound across rounds. The edge SETS
-    each round produces are identical to the r7 window form's
-    (multiplicities differ, bounded by per-round coincidence), so
-    labels are identical; pinned by test_clustering's set-equality and
-    end-to-end tests."""
-    from pyspark.sql import Window
-
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    w = Window.partitionBy("u").orderBy("v")
-    # sorted asc by v, the frame's first value IS the partition min
-    m = F.least(F.first("v").over(w), F.col("u"))
-    keep = F.lag("v").over(w).isNull() | (F.lag("v").over(w) != F.col("v"))
-    return (
-        sym.select("u", "v", m.alias("m"), keep.alias("keep"))
-        .filter(F.col("keep") & (F.col("v") > F.col("u")))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-
-
-def _small_star_window_nodistinct(e: DataFrame) -> DataFrame:
-    """:func:`_small_star_window` with the round-final ``distinct``
-    replaced by the same fused input dedup as
-    :func:`_large_star_window_nodistinct`: duplicate directed edges are
-    adjacent under the window's existing ``ORDER BY v`` and dropped via
-    ``lag``; the representative self row rides on ``row_number == 1``
-    (always a kept row — a partition's first row has no lag). One
-    shuffle+sort total, no join, no distinct."""
-    from pyspark.sql import Window
-
-    d = e.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    )
-    w = Window.partitionBy("u").orderBy("v")
-    rows = d.select(
-        "u",
-        "v",
-        F.first("v").over(w).alias("m"),
-        F.row_number().over(w).alias("rn"),
-        (F.lag("v").over(w).isNull()
-         | (F.lag("v").over(w) != F.col("v"))).alias("keep"),
-    ).filter("keep")
-    pair = F.struct(F.col("v").alias("a"), F.col("m").alias("b"))
-    self_pair = F.when(
-        F.col("rn") == 1, F.struct(F.col("u").alias("a"), F.col("m").alias("b"))
-    )
-    return (
-        rows.select(F.explode(F.array(pair, self_pair)).alias("s"))
-        .filter(F.col("s").isNotNull())
-        .select(F.col("s.a").alias("u"), F.col("s.b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-
-
-def _round_step(e: DataFrame, pin: bool) -> DataFrame:
-    """One alternating round (large star then small star), in the
-    implementation selected by ``SPARK_GRAFT_CC_STAR``: ``window`` (the
-    DEFAULT since r7 — join-free window-function stars, round-final
-    ``distinct``), ``window-nodistinct`` (r8 — the same window stars
-    with input dedup fused into each star's window pass: TWO exchanges
-    per round, zero joins, zero aggregates; measured-and-rejected as
-    default, see below), or ``join`` (the r6 form with the volume-gated
-    pinned exchange, kept as the reference implementation and for A/B
-    probes). Flipping the knob never changes results, only the plan.
-
-    Why window beat join (r7, interleaved fresh-JVM A/Bs): each
-    join-form star pays exchange + aggregation + join probe; the
-    window form computes the per-node min as ``min(v) OVER (PARTITION
-    BY u)`` in ONE shuffle+sort and joins nothing. Join vs window:
-    10M edges 66.7-71.1 s vs 44.1-46.5 s, 100M edges 515.3/646.9 s vs
-    476.3/506.5 s, both interleaved pairs to window.
-
-    Why nodistinct is NOT the default (r8, fresh JVM per sample, arms
-    alternated, order reversed between pairs): dropping the round-final
-    distinct removes a third of each round's exchanges, but the next
-    star then SHUFFLES the un-deduped multiset before its in-window
-    lag-dedup can act — and mid-convergence rewiring makes coincident
-    edges (many nodes receiving the same local min) a large fraction
-    of the volume on big graphs, so what the dropped exchange saves,
-    the fatter remaining shuffles give back. Measured: at 10M edges
-    nodistinct is consistently slightly faster (39.3/39.8/41.4/42.3 s
-    vs window's 41.2/41.6/41.8/42.9; 3 of 4 adjacent pairs, min 39.3
-    vs 41.2) — but at 100M edges (the century leg, 64g heap, width
-    256, 4 samples/arm spanning 90 min of heavy host drift) the
-    adjacent pairs split 2-2, mins tied (407.5 nd vs 408.2 w), and
-    medians favored window (434.5 vs 534.5 s). No demonstrated win at
-    the scale that matters = no flip; the knob stays for workloads
-    whose duplicate density differs (plan shape pinned in
-    test_plan_shapes.py::test_nodistinct_star_round_is_two_exchanges)."""
-    import os
-
-    impl = os.environ.get("SPARK_GRAFT_CC_STAR", "window")
-    if impl not in ("window", "window-nodistinct", "join"):
-        # a typo ('JOIN', 'join ') silently selecting one arm's impl on
-        # BOTH arms of an A/B is exactly the measurement-honesty
-        # failure this knob exists to prevent — fail loudly
-        raise ValueError(
-            "SPARK_GRAFT_CC_STAR must be 'window-nodistinct', 'window', "
-            f"or 'join', got {impl!r}"
-        )
-    if impl == "join":
-        return _small_star(_large_star(e, pin), pin)
-    if impl == "window":
-        return _small_star_window(_large_star_window(e))
-    return _small_star_window_nodistinct(_large_star_window_nodistinct(e))
-
-
-def _small_star(e: DataFrame, pin: bool) -> DataFrame:
-    """Direct edges large->small; for each node u connect all of its
-    smaller neighbors (and u itself) to the minimum one.
-
-    Same volume-gated pinned-exchange shape as :func:`_large_star`: on
-    big graphs one shuffle of the directed edge set serves the
-    min-aggregation and the join."""
-    d = e.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    )
-    if pin:
-        d = d.repartition(F.col("u"))
-    mins = d.groupBy("u").agg(F.min("v").alias("m"))
-    rewired = d.join(mins, on="u").select(F.col("v").alias("u"), F.col("m").alias("v"))
-    selfs = mins.select(F.col("u"), F.col("m").alias("v"))
-    return (
-        rewired.union(selfs)
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+def _round_step(e: DataFrame) -> DataFrame:
+    """One alternating round: large star then small star. Its output is
+    a distinct edge set, which the row-counting convergence probe in
+    :func:`_connected_components_loop` relies on."""
+    return _small_star_window(_large_star_window(e))
 
 
 def connected_components(
@@ -397,8 +220,7 @@ def connected_components(
         # block footprint is readable from the storage manager. The
         # loop keeps at most ~2 full-size checkpoints resident
         # (previous + current round — superseded ones are released
-        # eagerly; r10 removed the resident all-nodes table); 4x still
-        # buffers large-star's transient
+        # eagerly); 4x still buffers large-star's transient
         # expansion. Demote only when that working set would not fit
         # beside execution in the unified region (~60% of heap, half
         # of it eviction-protected storage). Unknown heap or footprint
@@ -416,20 +238,16 @@ def connected_components(
         # needed it materialized before the size was known): one cheap
         # shuffle-free copy-through, after which the big edge set no
         # longer occupies the storage-memory region the loop's first
-        # distinct() aggregations need. Measured on the x100 probe
-        # (100M edges, 8g heap): with raw resident in unified memory the
-        # all-nodes distinct dies in UNABLE_TO_ACQUIRE_MEMORY before the
-        # first round starts.
+        # aggregations need. Measured on the x100 probe (100M edges, 8g
+        # heap): with raw resident in unified memory the first round
+        # dies in UNABLE_TO_ACQUIRE_MEMORY.
         demoted = raw.localCheckpoint(storageLevel=level)
         _release_checkpoint(raw)
         raw = demoted
     try:
         if width is not None:
             spark.conf.set(key, str(width))
-        return _connected_components_loop(
-            raw, max_iterations, level,
-            pin=n_edges >= PIN_EXCHANGE_ABOVE_EDGES, n_edges=n_edges,
-        )
+        return _connected_components_loop(raw, max_iterations, level, n_edges)
     finally:
         spark.conf.set(key, session_width)
 
@@ -438,186 +256,75 @@ def connected_components(
 # this driver: one dict per completed round — {'sec': wall seconds for
 # the round's star step + materializing count (+ fixed-point probe on
 # probed rounds), 'edges': the round's output edge count, 'probed':
-# whether the count plateau let the convergence probe run}. Written by
-# _connected_components_loop, read by tools/scale_probe.py century-cc
-# (r8 judge task #8: the 100M-edge leg reads 375-730 s night-to-night
-# and one total can't say whether the variance is round-count or
-# per-round shuffle time). Driver-side diagnostic only — last call
-# wins; not part of the result contract and not thread-safe.
+# whether the count plateau let the convergence probe run}. Read by
+# tools/scale_probe.py century-cc to split a total into round count vs
+# per-round shuffle time. Driver-side diagnostic only — last call wins;
+# not part of the result contract and not thread-safe.
 LAST_RUN_ROUND_STATS: list = []
 
 
 def _connected_components_loop(
-    raw: DataFrame, max_iterations: int, level=None, pin: bool = False,
+    raw: DataFrame, max_iterations: int, level=None,
     n_edges: "int | None" = None,
 ) -> DataFrame:
+    """Run the star rounds over the materialized ``raw`` checkpoint and
+    label every node. Takes ownership of ``raw``: it and every
+    intermediate checkpoint are released on every exit path, including
+    ``max_iterations=0`` and exceptions; only the returned labeling
+    stays persisted."""
     import time as _time
 
     global LAST_RUN_ROUND_STATS
     round_stats: list = []
     LAST_RUN_ROUND_STATS = round_stats
-    # Singleton recovery needs only the SELF-LOOP-ONLY nodes, not the
-    # full node set (r10): every node with at least one non-self-loop
-    # edge is preserved through the star rounds — a node that is the
-    # minimum of some neighborhood survives as the rewired target m,
-    # any other node keeps an edge toward a smaller neighbor and
-    # survives as a source, and the alternating-stars connectivity
-    # invariant (Kiveris et al.) keeps every size->=2 component's nodes
-    # in the edge set through convergence — so the final labeling
-    # already covers them, and the old 2|E|-row all-nodes distinct
-    # (checkpointed and held resident through the WHOLE loop: at the
-    # 100M-edge probe a 50M-row table squatting in the storage region
-    # the rounds compete for) only ever contributed nodes whose every
-    # edge was a self-loop. Those come from a near-free filter instead.
+    # Singleton recovery needs only the SELF-LOOP-ONLY nodes: every node
+    # with a non-self-loop edge survives the star rounds (as a rewired
+    # target m or as a source toward a smaller neighbor), and the
+    # alternating-stars connectivity invariant keeps every size->=2
+    # component's nodes in the edge set through convergence.
     self_only = (
         raw.filter(F.col("u") == F.col("v"))
         .select(F.col("u").alias("node"))
         .distinct()
         .localCheckpoint(storageLevel=level)
     )
-    n_self = self_only.count()
-    # r12 (r11 verdict task 1, "round-1 spike"): the pre-loop
-    # ``distinct().localCheckpoint() + count`` staged the deduped edge
-    # set through storage before round 1 ever ran — a full shuffle, a
-    # full persisted copy and an extra action, all on the LARGEST edge
-    # set the loop will ever see. Round 1 does not need it: both star
-    # windows compute per-partition minima (duplicate-insensitive) and
-    # the round-final ``distinct`` already dedups the output, so round
-    # 1 may consume the raw filtered plan directly; the gate count for
-    # round 0 is the caller's raw count (an upper bound — a false
-    # plateau just runs the probe early, which is documented-safe).
-    # ``SPARK_GRAFT_CC_INGEST=staged`` restores the r11 shape for A/B.
-    import os as _os_ing
-
-    _ingest = _os_ing.environ.get("SPARK_GRAFT_CC_INGEST", "fused")
-    if _ingest not in ("fused", "staged"):
-        raise ValueError(
-            f"SPARK_GRAFT_CC_INGEST must be 'fused' or 'staged', got {_ingest!r}"
-        )
-    if _ingest == "staged":
-        e = (
-            raw.filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(storageLevel=level)
-        )
-        # raw's blocks are superseded the moment both derivatives above
-        # are materialized (the caller's count() already ran on them)
-        _release_checkpoint(raw)
-        prev_count = e.count()
-        pending_release = None
-    else:
-        e = raw.filter(F.col("u") != F.col("v"))
-        # the raw checkpoint feeds round 1 (twice, via the symmetrizing
-        # union — two reads of persisted blocks, the same cost the
-        # staged shape paid reading its own checkpoint) and must stay
-        # resident until round 1's output materializes
+    # Fused ingest: round 1 consumes the raw filtered plan directly
+    # instead of a pre-loop distinct checkpoint — both star windows
+    # compute duplicate-insensitive minima and the round-final distinct
+    # dedups the output. The round-0 gate count is the caller's raw
+    # count (an upper bound; a false plateau just runs the probe early).
+    # `raw` feeds round 1 and is released once round 1 materializes.
+    e = raw.filter(F.col("u") != F.col("v"))
+    prev = None
+    pending_release = raw
+    try:
+        n_self = self_only.count()
         prev_count = raw.count() if n_edges is None else n_edges
-        pending_release = raw
-
-    # NOTE on a measured dead end (round 6): per-round FREEZE-OUT of
-    # finished star components (drop proper stars from the working edge
-    # set so later rounds shuffle only the churning frontier) was
-    # implemented and bisected as a net LOSS on the probe workloads —
-    # 1M edges 20.5 s -> 43.0 s, 10M edges 73.8 s -> 99.7 s — because
-    # on a random match graph the giant component holds nearly all the
-    # edge mass and never freezes until the final round, while the
-    # bookkeeping (node-role aggregation + done/live split joins) adds
-    # ~3 extra full-edge-set shuffles and 2 extra actions to EVERY
-    # round. What survives from that attempt is (a) the superseded-
-    # checkpoint release below and (b) the stricter node-role
-    # convergence probe, both wins independent of graph shape.
-    # r11 experiment knob: SPARK_GRAFT_CC_ROUND1=small-only runs the
-    # FIRST round as small-star alone (no large-star). Correctness is
-    # unaffected by construction: every star application preserves the
-    # component structure, and ONLY the fixed-point probe below ever
-    # declares convergence — a skipped star can at worst cost an extra
-    # round. Exists for the ab_cc_probe A/B of the round-1 spike
-    # (round 1 measures ~1.8x round 2 at the same edge volume).
-    import os as _os_r1
-
-    _round1_small_only = (
-        _os_r1.environ.get("SPARK_GRAFT_CC_ROUND1", "") == "small-only"
-    )
-    for _round_idx in range(max_iterations):
-        _round_t0 = _time.perf_counter()
-        prev = e
-        # lazy checkpoint: the count below is the action that
-        # materializes it, so each round runs ONE heavy job instead of
-        # an eager-checkpoint job followed by a probe job
-        if _round_idx == 0 and _round1_small_only:
-            stepped = _small_star_window(e)
-        else:
-            stepped = _round_step(e, pin)
-        e = stepped.localCheckpoint(
-            eager=False, storageLevel=level
-        )
-        count = e.count()
-        if pending_release is not None:
-            # fused ingest: round 1 has materialized, the raw checkpoint
-            # has no further consumer (self_only is its own checkpoint)
-            _release_checkpoint(pending_release)
-            pending_release = None
-        converged = False
-        # COUNT-GATED fixed-point probe: a converged round necessarily
-        # reproduces the previous round's edge count (f(fixpoint) =
-        # fixpoint), so rounds where the count still moved skip the
-        # probe outright — its union+groupBy re-reads 2|e| checkpointed
-        # rows, measured ~18% of loop wall-clock at 10M edges (8.8 s of
-        # 49 s) and proportionally more at 100M, while the gating count
-        # is a near-free scan of the persisted blocks that the lazy
-        # checkpoint needs as its materializing action anyway. An
-        # accidental count plateau before convergence just runs the
-        # probe one round early (it answers "not yet"); a star forest
-        # reached in the same round the count moved is detected one
-        # round late (one extra no-op round, then the plateau gates the
-        # probe in). Correctness never rests on the gate — only the
-        # probe below ever declares convergence.
-        if count == prev_count:
-            # Fixed-point probe via node roles in ONE map-side-combined
-            # aggregation: the round output is a settled star forest
-            # iff no node both emits and receives an edge AND no node
-            # emits more than one. This is deliberately STRICTER than
-            # the previous "no target is also a source" semi-join
-            # probe: small-star output can hand a node TWO outgoing
-            # edges toward two different local minima (it sat in two
-            # rewired neighborhoods whose roots are not themselves
-            # sources), a state the old probe declared converged —
-            # mislabeling that node into two components — but which is
-            # not a fixed point. Such a node keeps nsrc > 1 here, so
-            # the loop keeps iterating until the halves merge.
-            # Under window-nodistinct stars the round output keeps
-            # bounded duplicate edges, and a row-counting probe would
-            # read a duplicated child->root edge as "two outgoing
-            # edges" and never declare a true star forest converged —
-            # so that impl counts DISTINCT targets (an Expand on probe
-            # rounds only; the count gate keeps those rare). The
-            # distinct-preserving impls (window/join) keep the plain
-            # row-count aggregation: same answer on a distinct edge
-            # set, no Expand, so the default path pays nothing for the
-            # variant's tolerance.
-            import os as _os
-
-            _tolerant = (
-                _os.environ.get("SPARK_GRAFT_CC_STAR", "window")
-                == "window-nodistinct"
-            )
-            if _tolerant:
-                tgt_type = e.schema["v"].dataType
-                churn = (
-                    e.select(F.col("u").alias("n"), F.col("v").alias("tgt"))
-                    .union(
-                        e.select(
-                            F.col("v").alias("n"),
-                            F.lit(None).cast(tgt_type).alias("tgt"),
-                        )
-                    )
-                    .groupBy("n")
-                    .agg(
-                        F.countDistinct("tgt").alias("nsrc"),
-                        F.count(F.when(F.col("tgt").isNull(), 1)).alias("ntgt"),
-                    )
-                )
-            else:
+        for _round_idx in range(max_iterations):
+            _round_t0 = _time.perf_counter()
+            prev = e
+            # lazy checkpoint: the count below is the action that
+            # materializes it, so each round runs ONE heavy job
+            e = _round_step(e).localCheckpoint(eager=False, storageLevel=level)
+            count = e.count()
+            if pending_release is not None:
+                _release_checkpoint(pending_release)
+                pending_release = None
+            converged = False
+            # COUNT-GATED fixed-point probe: a converged round reproduces
+            # the previous round's edge count (f(fixpoint) = fixpoint), so
+            # rounds where the count still moved skip the probe — its
+            # union+groupBy re-reads 2|e| rows, measured ~18% of loop time
+            # at 10M edges. A false plateau runs the probe early (it
+            # answers "not yet"); correctness never rests on the gate.
+            if count == prev_count:
+                # Node roles in ONE map-side-combined aggregation: the
+                # round output is a settled star forest iff no node both
+                # emits and receives an edge AND no node emits more than
+                # one. The second clause matters: small-star output can
+                # hand a node two outgoing edges toward two different
+                # local minima, which is not a fixed point. Counting rows
+                # is exact because _round_step's output is distinct.
                 churn = (
                     e.select(
                         F.col("u").alias("n"), F.lit(1).alias("s"),
@@ -631,48 +338,48 @@ def _connected_components_loop(
                     )
                     .groupBy("n")
                     .agg(F.sum("s").alias("nsrc"), F.sum("t").alias("ntgt"))
+                    .filter(
+                        (F.col("nsrc") >= 1)
+                        & ((F.col("nsrc") > 1) | (F.col("ntgt") > 0))
+                    )
                 )
-            churn = churn.filter(
-                (F.col("nsrc") >= 1) & ((F.col("nsrc") > 1) | (F.col("ntgt") > 0))
-            )
-            converged = churn.isEmpty()
-        round_stats.append({
-            "sec": round(_time.perf_counter() - _round_t0, 3),
-            "edges": count,
-            "probed": count == prev_count,
-        })
-        prev_count = count
-        # the superseded round's blocks are re-readable only until this
-        # release; every consumer of `prev` (this round's stars + probe)
-        # has already run
-        _release_checkpoint(prev)
-        if converged:
-            break
+                converged = churn.isEmpty()
+            round_stats.append({
+                "sec": round(_time.perf_counter() - _round_t0, 3),
+                "edges": count,
+                "probed": count == prev_count,
+            })
+            prev_count = count
+            # every consumer of `prev` (this round's stars + probe) has run
+            _release_checkpoint(prev)
+            prev = None
+            if converged:
+                break
 
-    # converged: e is a star forest (child -> root). Roots label themselves,
-    # and nodes whose only edges were self-loops come back as singleton
-    # components (the docstring contract: EVERY node appearing in edges).
-    children = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = e.select(F.col("v").alias("node"), F.col("v").alias("component"))
-    labeled = children.union(roots).distinct()
-    # self-loop-only nodes label themselves; nodes that ALSO carried a
-    # real edge are already in `labeled` (the anti-join dedups them).
-    # The empty-selfs fast path skips the anti-join's full reshuffle of
-    # `labeled` — the common case for candidate-pair inputs, which are
-    # a != b by construction.
-    if n_self == 0:
-        singletons = labeled.filter(F.lit(False))
-    else:
-        singletons = self_only.join(
-            labeled, on="node", how="left_anti"
-        ).select("node", F.col("node").alias("component"))
-    # eager: materialize the labeling inside the caller's narrowed
-    # shuffle-width window (see connected_components) and hand consumers
-    # a checkpointed table — entity resolution joins it twice downstream
-    result = labeled.union(singletons).localCheckpoint(storageLevel=level)
-    for superseded in (e, self_only):
-        _release_checkpoint(superseded)
-    return result
+        # converged: e is a star forest (child -> root). Roots label
+        # themselves, and nodes whose only edges were self-loops come back
+        # as singleton components (EVERY node appearing in edges).
+        children = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
+        roots = e.select(F.col("v").alias("node"), F.col("v").alias("component"))
+        labeled = children.union(roots).distinct()
+        # nodes that ALSO carried a real edge are already in `labeled`
+        # (the anti-join dedups them); the empty-selfs fast path skips the
+        # anti-join's reshuffle — the common case for candidate pairs
+        if n_self == 0:
+            singletons = labeled.filter(F.lit(False))
+        else:
+            singletons = self_only.join(
+                labeled, on="node", how="left_anti"
+            ).select("node", F.col("node").alias("component"))
+        # eager: materialize the labeling inside the caller's narrowed
+        # shuffle-width window (see connected_components) and hand
+        # consumers a checkpointed table — ER joins it twice downstream
+        return labeled.union(singletons).localCheckpoint(storageLevel=level)
+    finally:
+        # non-checkpoint plans (e.g. `e` after zero rounds) are skipped
+        for df in (pending_release, prev, e, self_only):
+            if df is not None:
+                _release_checkpoint(df)
 
 
 def cluster_matched_pairs(

@@ -1,6 +1,10 @@
 """Distributed connected-components tests (replaces reference driver DFS,
 src/clustering.py:6-54)."""
 
+import random
+
+import pytest
+
 from pyspark_entity_resolution_spark.operators.clustering import (
     cluster_matched_pairs,
     connected_components,
@@ -101,156 +105,6 @@ def test_explicit_checkpoint_storage_and_probes(spark):
     assert (_jvm_max_heap(spark) or 0) > 0
 
 
-def test_pinned_exchange_path_matches_default(spark, monkeypatch):
-    """The per-star exchange pin is volume-gated (PIN_EXCHANGE_ABOVE_EDGES,
-    2M), so ordinary test graphs never execute the pinned star plans —
-    force the gate to zero and assert the pinned path labels a random
-    graph identically to the default path. Guards the pin's rewiring
-    algebra (the repartition must not change which rows meet which
-    minima), not its performance. The pin exists only in the JOIN star
-    implementation (r7 default is window), so both arms run under
-    SPARK_GRAFT_CC_STAR=join."""
-    import random
-
-    from pyspark_entity_resolution_spark.operators import clustering as C
-
-    rng = random.Random(42)
-    n_nodes, n_edges = 400, 900
-    edges = spark.createDataFrame(
-        [
-            (rng.randrange(n_nodes), rng.randrange(n_nodes))
-            for _ in range(n_edges)
-        ],
-        ["src", "dst"],
-    )
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "join")
-    baseline = _components_as_partitions(
-        connected_components(edges).collect()
-    )
-    monkeypatch.setattr(C, "PIN_EXCHANGE_ABOVE_EDGES", 0)
-    pinned = _components_as_partitions(
-        connected_components(edges).collect()
-    )
-    assert pinned == baseline
-
-
-def test_window_star_impl_matches_join_impl(spark, monkeypatch):
-    """SPARK_GRAFT_CC_STAR=window selects the join-free window-function
-    stars; each star's rewiring must equal the join form's row set, and
-    end-to-end labeling must be identical on a random multigraph (with
-    self-loops and duplicate edges, the inputs that stress the
-    filter/distinct placement)."""
-    import random
-
-    from pyspark_entity_resolution_spark.operators.clustering import (
-        _large_star,
-        _large_star_window,
-        _small_star,
-        _small_star_window,
-    )
-
-    rng = random.Random(99)
-    n_nodes, n_edges = 300, 700
-    raw = [
-        (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)
-    ] + [(5, 5), (7, 7), (10, 20), (10, 20)]  # self-loops + dup edges
-    edges = spark.createDataFrame(raw, ["src", "dst"])
-    e = edges.select(
-        edges.src.alias("u"), edges.dst.alias("v")
-    ).filter("u <> v")
-
-    j_large = {(r["u"], r["v"]) for r in _large_star(e, pin=False).collect()}
-    w_large = {(r["u"], r["v"]) for r in _large_star_window(e).collect()}
-    assert w_large == j_large
-
-    j_small = {(r["u"], r["v"]) for r in _small_star(e, pin=False).collect()}
-    w_small = {(r["u"], r["v"]) for r in _small_star_window(e).collect()}
-    assert w_small == j_small
-
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "join")
-    baseline = _components_as_partitions(connected_components(edges).collect())
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "window")
-    windowed = _components_as_partitions(connected_components(edges).collect())
-    assert windowed == baseline
-
-
-def test_nodistinct_star_impl_matches_join_impl(spark, monkeypatch):
-    """The r8 fused-dedup stars (SPARK_GRAFT_CC_STAR=window-nodistinct)
-    drop the round-final distinct and dedup each star's INPUT inside its
-    window pass instead — their output may carry bounded duplicate rows,
-    but the edge SET per star must equal the join form's exactly, the
-    duplicate multiplicity must stay bounded (output rows <= distinct
-    input edges + centers, never multiset blowup), and end-to-end labels
-    must be identical on a random multigraph with self-loops and
-    duplicate edges."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from pyspark_entity_resolution_spark.operators.clustering import (
-        _large_star,
-        _large_star_window_nodistinct,
-        _small_star,
-        _small_star_window_nodistinct,
-    )
-
-    rng = random.Random(1234)
-    n_nodes, n_edges = 300, 700
-    raw = [
-        (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)
-    ] + [(5, 5), (7, 7), (10, 20), (10, 20), (20, 10)]  # loops + dups both ways
-    edges = spark.createDataFrame(raw, ["src", "dst"])
-    e = edges.select(
-        edges.src.alias("u"), edges.dst.alias("v")
-    ).filter("u <> v")
-
-    j_large = {(r["u"], r["v"]) for r in _large_star(e, pin=False).collect()}
-    nd_large_rows = [
-        (r["u"], r["v"]) for r in _large_star_window_nodistinct(e).collect()
-    ]
-    assert set(nd_large_rows) == j_large
-    # input dedup bounds emission: one row per DISTINCT undirected edge
-    n_distinct_edges = e.select(
-        F.least("u", "v"), F.greatest("u", "v")
-    ).distinct().count()
-    assert len(nd_large_rows) <= n_distinct_edges
-
-    j_small = {(r["u"], r["v"]) for r in _small_star(e, pin=False).collect()}
-    nd_small_rows = [
-        (r["u"], r["v"])
-        for r in _small_star_window_nodistinct(e).collect()
-    ]
-    assert set(nd_small_rows) == j_small
-    n_centers = e.select(F.greatest("u", "v")).distinct().count()
-    assert len(nd_small_rows) <= n_distinct_edges + n_centers
-
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "join")
-    baseline = _components_as_partitions(connected_components(edges).collect())
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "window-nodistinct")
-    fused = _components_as_partitions(connected_components(edges).collect())
-    assert fused == baseline
-
-
-def test_nodistinct_star_long_chain_and_string_keys(spark, monkeypatch):
-    """Convergence-sensitive shapes under the fused-dedup stars: a long
-    chain (max alternating-star rounds for the node count) and
-    string-namespaced node keys (the cluster_matched_pairs path) — the
-    duplicate-tolerant probe must still declare the true fixed point
-    and only it."""
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "window-nodistinct")
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(200)], ["src", "dst"]
-    )
-    parts = _components_as_partitions(connected_components(chain).collect())
-    assert parts == {frozenset(range(201))}
-
-    named = spark.createDataFrame(
-        [("a:1", "b:2"), ("b:2", "a:3"), ("a:9", "b:9")], ["src", "dst"]
-    )
-    parts = _components_as_partitions(connected_components(named).collect())
-    assert parts == {frozenset({"a:1", "b:2", "a:3"}), frozenset({"a:9", "b:9"})}
-
-
 def test_round_stats_diagnostic_records_every_round(spark):
     """LAST_RUN_ROUND_STATS (r9, feeding the century-cc probe's
     per-round decomposition): one entry per executed round, seconds
@@ -302,60 +156,118 @@ def test_self_loop_only_nodes_label_as_singletons(spark):
     assert got2 == {(1, 1), (2, 1), (4, 4), (5, 4)}
 
 
-def test_round1_small_only_knob_matches_default(spark, monkeypatch):
-    """SPARK_GRAFT_CC_ROUND1=small-only (r11 experiment knob, measured-
-    and-rejected as default) runs the first round as small-star alone.
-    Labels must be identical: every star application preserves the
-    component partition and only the fixed-point probe declares
-    convergence, so the knob can cost rounds, never correctness."""
-    import random
+def _union_find_labels(rows):
+    """Pure-Python oracle: {(node, min member of its component)}."""
+    parent = {}
 
-    rng = random.Random(123)
-    n_nodes, n_edges = 400, 900
-    raw = [
-        (rng.randrange(n_nodes), rng.randrange(n_nodes))
-        for _ in range(n_edges)
-    ] + [(3, 3), (8, 8), (11, 30), (11, 30)]
-    edges = spark.createDataFrame(raw, ["src", "dst"])
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-    monkeypatch.delenv("SPARK_GRAFT_CC_ROUND1", raising=False)
-    baseline = _components_as_partitions(connected_components(edges).collect())
-    monkeypatch.setenv("SPARK_GRAFT_CC_ROUND1", "small-only")
-    skipped = _components_as_partitions(connected_components(edges).collect())
-    assert skipped == baseline
+    for a, b in rows:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in parent}
 
 
-def test_ingest_knob_fused_matches_staged(spark, monkeypatch):
-    """SPARK_GRAFT_CC_INGEST selects whether round 1 consumes the raw
-    filtered edge plan directly (``fused``, the r12 default — no
-    pre-loop distinct/checkpoint/count of the largest edge set the loop
-    ever sees) or the r11 staged distinct checkpoint. Labels must be
-    identical: both star forms compute duplicate-insensitive
-    per-neighborhood minima and the round-final dedup absorbs input
-    multiplicity, so the knob can only move WHERE the dedup happens."""
-    import random
+def _multigraph_loops_and_dups():
+    rng = random.Random(99)
+    rows = [(rng.randrange(300), rng.randrange(300)) for _ in range(700)]
+    rows += [(5, 5), (7, 7), (10, 20), (10, 20), (20, 10)]
+    return rows, "src long, dst long"
 
+
+def _dup4_shuffled():
     rng = random.Random(7)
-    raw = [
-        (rng.randrange(300), rng.randrange(300)) for _ in range(700)
-    ] + [(5, 5), (5, 5), (950, 950), (17, 44), (17, 44), (17, 44)]
-    edges = spark.createDataFrame(raw, ["src", "dst"])
+    distinct = [(rng.randrange(300), rng.randrange(300)) for _ in range(200)]
+    rows = distinct * 4
+    rng.shuffle(rows)
+    return rows, "src long, dst long"
 
-    monkeypatch.setenv("SPARK_GRAFT_CC_INGEST", "staged")
-    staged = sorted(
-        (r.node, r.component) for r in connected_components(edges).collect()
+
+def _self_loop_heavy():
+    rng = random.Random(3)
+    rows = [(rng.randrange(150), rng.randrange(150)) for _ in range(60)]
+    rows += [(n, n) for n in range(100, 260)] * 2
+    rng.shuffle(rows)
+    return rows, "src long, dst long"
+
+
+def _chain_200():
+    # alternate edge direction so neither star sees a uniform orientation
+    rows = [(i, i + 1) if i % 2 else (i + 1, i) for i in range(199)]
+    return rows, "src long, dst long"
+
+
+def _string_namespaced():
+    rng = random.Random(11)
+    rows = [(f"a:{rng.randrange(40)}", f"b:{rng.randrange(40)}")
+            for _ in range(50)]
+    rows += [("a:1", "b:2"), ("b:2", "a:3"), ("a:9", "b:9"), ("a:10", "a:10")]
+    return rows, "src string, dst string"
+
+
+def _empty():
+    return [], "src long, dst long"
+
+
+@pytest.mark.parametrize(
+    "graph",
+    [_multigraph_loops_and_dups, _dup4_shuffled, _self_loop_heavy,
+     _chain_200, _string_namespaced, _empty],
+    ids=lambda g: g.__name__.lstrip("_"),
+)
+def test_labels_match_union_find_oracle(spark, graph):
+    """Exact (node, component = min member) rows against union-find on
+    adversarial graphs: duplicate edges in both directions, self-loops
+    (including self-loop-only nodes), a long chain, string keys whose
+    order is not numeric order, and no edges at all."""
+    rows, schema = graph()
+    edges = spark.createDataFrame(rows, schema)
+    got = [(r.node, r.component)
+           for r in connected_components(edges).collect()]
+    assert len(got) == len(set(got)), "a node was labeled twice"
+    assert set(got) == _union_find_labels(rows)
+
+
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_zero_iterations_releases_every_checkpoint(spark):
+    """With max_iterations=0 no round ever materializes, so the raw edge
+    checkpoint and the self-loop set must still be released on the way
+    out; only the returned labeling stays persisted."""
+    from pyspark_entity_resolution_spark.operators.clustering import (
+        _release_checkpoint,
     )
-    monkeypatch.setenv("SPARK_GRAFT_CC_INGEST", "fused")
-    fused = sorted(
-        (r.node, r.component) for r in connected_components(edges).collect()
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 4)], "src long, dst long"
     )
-    assert fused == staged
+    before = _persisted_rdd_ids(spark)
+    out = connected_components(edges, max_iterations=0)
+    _release_checkpoint(out)
+    assert _persisted_rdd_ids(spark) - before == set()
 
 
-def test_ingest_knob_rejects_typos(spark, monkeypatch):
-    import pytest
+def test_failed_round_releases_every_checkpoint(spark, monkeypatch):
+    """An exception inside the star rounds must not strand the raw edge
+    checkpoint or the self-loop set."""
+    from pyspark_entity_resolution_spark.operators import clustering as C
 
-    monkeypatch.setenv("SPARK_GRAFT_CC_INGEST", "Fused ")
-    edges = spark.createDataFrame([(1, 2)], ["src", "dst"])
-    with pytest.raises(ValueError, match="SPARK_GRAFT_CC_INGEST"):
-        connected_components(edges).collect()
+    def boom(*args, **kwargs):
+        raise RuntimeError("round failed")
+
+    monkeypatch.setattr(C, "_round_step", boom)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 4)], "src long, dst long"
+    )
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="round failed"):
+        connected_components(edges)
+    assert _persisted_rdd_ids(spark) - before == set()

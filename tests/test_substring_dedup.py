@@ -171,35 +171,22 @@ def test_profile_fraction_and_clean_doc_retention(spark):
     assert (prof[2].dup_tokens, prof[2].n_spans, prof[2].dup_token_frac) == (0, 0, 0.0)
 
 
-def test_hash_encodings_produce_identical_outputs(spark, monkeypatch):
-    """SPARK_GRAFT_SUBSTR_HASH selects the internal window-fingerprint
-    encoding (md5 hex string / xx128 struct / xx64 bigint). ``wh`` never
-    leaves the operator, so every encoding must yield identical spans
-    and identical cut texts — including the keep-first survivor choice,
-    which orders by (id, start) WITHIN a fingerprint partition and is
-    therefore encoding-independent."""
-    shared = list(range(100, 115))
-    rows = [
-        (0, _text(*range(0, 5), *shared)),
-        (1, _text(*shared, *range(200, 206))),
-        (2, _text(*range(300, 311))),
-        (3, _text(*shared, *shared)),  # internal repetition too
-    ]
-    df = _docs(spark, rows)
-    outs = {}
-    for impl in ("md5", "xx128", "xx64"):
-        monkeypatch.setenv("SPARK_GRAFT_SUBSTR_HASH", impl)
-        spans = sorted(tuple(r) for r in duplicated_spans(df, w=10).collect())
-        cut = sorted(tuple(r) for r in cut_spans(df, w=10).collect())
-        outs[impl] = (spans, cut)
-    assert outs["md5"] == outs["xx128"] == outs["xx64"]
-    assert outs["md5"][0], "fixture must actually contain duplicated spans"
+def test_fingerprint_halves_are_independent_hashes(spark):
+    """The two 64-bit halves of ``wh`` must hash the window string under
+    two seeds. ``xxhash64(s, 1)`` would instead hash the literal 1 under
+    the seed ``h1`` — exactly XXH64.hashInt(1, h1) — leaving 64 bits of
+    collision resistance in a 128-bit struct."""
+    from pyspark.sql import functions as F
 
-
-def test_hash_encoding_knob_rejects_typos(spark, monkeypatch):
-    import pytest
-
-    monkeypatch.setenv("SPARK_GRAFT_SUBSTR_HASH", "sha1")
-    df = _docs(spark, [(0, _text(*range(20)))])
-    with pytest.raises(ValueError, match="SPARK_GRAFT_SUBSTR_HASH"):
-        window_fingerprints(df, w=10).collect()
+    df = _docs(spark, [(0, _text(*range(0, 30))), (1, _text(*range(100, 125)))])
+    derived = F.expr(
+        "reflect('org.apache.spark.sql.catalyst.expressions.XXH64', "
+        "'hashInt', 1, wh.h1)"
+    ).cast("bigint")
+    rows = (
+        window_fingerprints(df, w=10)
+        .select((F.col("wh.h2") == derived).alias("derived"))
+        .collect()
+    )
+    assert len(rows) == 21 + 16
+    assert not any(r.derived for r in rows)

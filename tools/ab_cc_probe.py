@@ -82,29 +82,7 @@ def main() -> None:
     ap.add_argument("--edges", type=int, default=10_000_000)
     ap.add_argument("--nodes", type=int, default=5_000_000)
     ap.add_argument("--scale-partitions", type=int, default=1)
-    ap.add_argument(
-        "--env", action="append", default=[], metavar="REF:KEY=VAL",
-        help="per-ARM env var (e.g. 'HEAD:SPARK_GRAFT_CC_ROUND1=small-"
-             "only') — lets one invocation A/B a knob at the SAME "
-             "commit; pass the same ref twice and tag one arm")
     args = ap.parse_args()
-    arm_env: dict[str, dict] = {}
-    for spec in args.env:
-        ref, _, kv = spec.partition(":")
-        k, _, v = kv.partition("=")
-        if not ref or not k:
-            ap.error(f"bad --env spec {spec!r} (want REF:KEY=VAL)")
-        arm_env.setdefault(ref, {})[k] = v
-    if arm_env and len(set(args.refs)) != len(args.refs):
-        # same ref on both arms + env tag: disambiguate by position
-        # is impossible with a ref-keyed map — require distinct names
-        # (use REF and REF~0 style aliases)
-        seen = set()
-        for r in args.refs:
-            if r in seen:
-                ap.error("--env with duplicate ref names is ambiguous; "
-                         "alias one arm (e.g. HEAD vs HEAD~0)")
-            seen.add(r)
 
     trees = {ref: _worktree(ref) for ref in args.refs}
     results: dict[str, list] = {ref: [] for ref in args.refs}
@@ -117,7 +95,6 @@ def main() -> None:
                 AB_CC_NODES=str(args.nodes),
                 AB_CC_EDGES=str(args.edges),
                 AB_CC_SCALE_PARTITIONS=str(args.scale_partitions),
-                **arm_env.get(ref, {}),
             )
             out = subprocess.run(
                 [sys.executable, "-c", PROBE], env=env,
