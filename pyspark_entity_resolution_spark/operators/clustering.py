@@ -23,8 +23,7 @@ README.md and OPTIMIZATION_r11.md/OPTIMIZATION_r12.md.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -237,10 +236,11 @@ def connected_components(
         # DEMOTE the raw checkpoint to the chosen level (the count above
         # needed it materialized before the size was known): one cheap
         # shuffle-free copy-through, after which the big edge set no
-        # longer occupies the storage-memory region the loop's first
+        # longer occupies the storage-memory region the loop's
         # aggregations need. Measured on the x100 probe (100M edges, 8g
-        # heap): with raw resident in unified memory the first round
-        # dies in UNABLE_TO_ACQUIRE_MEMORY.
+        # heap) when the loop still opened with an all-nodes distinct:
+        # with raw resident in unified memory that aggregation died in
+        # UNABLE_TO_ACQUIRE_MEMORY before the first round.
         demoted = raw.localCheckpoint(storageLevel=level)
         _release_checkpoint(raw)
         raw = demoted
