@@ -176,11 +176,7 @@ def test_batch_ingest_join_carries_no_payload_arrays(spark):
     assert all("__arr_vec" not in ln for ln in eexplode), eexplode
 
 
-def test_window_star_rounds_are_join_free(spark):
-    """One connected-components round has a single shape: two window
-    passes (one per star), the round-final distinct's HashAggregate, and
-    no join. A join on the iterated path costs an exchange, an
-    aggregation and a probe per round."""
+def _cc_round_plan(spark) -> str:
     from pyspark.sql import functions as F
 
     from pyspark_entity_resolution_spark.operators.clustering import (
@@ -190,10 +186,32 @@ def test_window_star_rounds_are_join_free(spark):
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], ["u", "v"]
     ).select(F.col("u").cast("long"), F.col("v").cast("long"))
+    return _round_step(e)._jdf.queryExecution().executedPlan().toString()
 
-    plan = _round_step(e)._jdf.queryExecution().executedPlan().toString()
+
+def test_window_star_rounds_are_join_free(spark):
+    """Each star of a connected-components round computes its per-node
+    minimum with one window pass, so a round holds exactly two windows
+    and no join. A join on the iterated path costs an exchange, an
+    aggregation and a probe per round."""
+    plan = _cc_round_plan(spark)
     assert plan.count("Window") == 2, plan
-    assert "HashAggregate" in plan, plan
+    assert "Join" not in plan, plan
+
+
+def test_nodistinct_star_round_is_two_exchanges(spark):
+    """Without its round-final distinct, a round's two stars shuffle
+    exactly twice: one exchange keyed on the node column per star's
+    window. The distinct adds the round's only other exchange, keyed on
+    the whole (u, v) edge, with its HashAggregate pair around it."""
+    import re
+
+    plan = _cc_round_plan(spark)
+    exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    assert plan.count("Exchange") == 3 and len(exchanges) == 3, plan
+    keys = [args.rsplit(",", 1)[0].split(", ") for args in exchanges]
+    assert sorted(len(k) for k in keys) == [1, 1, 2], plan
+    assert plan.count("HashAggregate") == 2, plan
     assert "Join" not in plan, plan
 
 
