@@ -2,9 +2,10 @@
 
 Re-expression of reference src/similarity.py (F6-F8, P7-P9 in SURVEY.md §2):
 Levenshtein on author strings, token-set Jaccard on titles, and the
-three-band match rule. All pure Column algebra — Catalyst orders the cheap
-predicates before the expensive ``levenshtein`` exactly as the reference
-does manually (reference src/similarity.py:63-64; report.pdf p.4 §3).
+three-band match rule. All pure Column algebra. Catalyst does not reorder
+predicates by cost; operators/matching.py puts cheap conditions the rule
+implies ahead of the ``levenshtein`` DP (the reference orders its filters
+by hand for the same reason, src/similarity.py:63-64; report.pdf p.4 §3).
 """
 
 from __future__ import annotations
@@ -52,7 +53,11 @@ def match_rule(
 
     - cond1: exact author match (score 0), same non-zero author count
     - cond2: exact author match with both sides author-less
-    - cond3: near match (0 < score < max_score), same author count
+    - cond3: near match (0 < score < max_score), same author count.
+
+    Every band needs equal author counts, and a score below ``max_score``
+    needs an author-length gap below it; operators/matching.py filters on
+    both before computing the score.
     """
     s = _col(scores)
     nl, nr = _col(num_authors_l), _col(num_authors_r)

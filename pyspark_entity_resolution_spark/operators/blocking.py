@@ -6,33 +6,34 @@ distinct — ~14 separate Spark jobs (reference src/match.py:100-120, G4 in
 SURVEY.md §2.8). That shape can't scale: the driver serializes the job
 sequence and every iteration rescans the inputs.
 
-Here each record *explodes* to its block keys — one row per
-``(venue_tag, window_start)`` combination it belongs to — and candidates
-come from ONE shuffle equi-join on the block key, which Catalyst executes
-as a hash/sort-merge join with AQE skew handling. Pair-set equivalence with
-the reference loop: a pair (a, b) survives the loop iff some (venue v,
-window [s, s+N] ⊆ [lower, upper]) has both records containing v with years
-inside the window — exactly the equi-join condition on exploded keys.
+Here candidates come from ONE equi-join on a ``(venue_tag, year)`` key.
+The loop's windows are ``[s, s+N]`` for ``s`` in ``[lower, upper - N]``,
+so two years ``ya``, ``yb`` share a window iff some such ``s`` has
+``max(ya, yb) - N <= s <= min(ya, yb)``, which holds iff
 
-Overlapping windows emit the same pair up to N+1 times in both
-formulations. The reference dedups the full scored rows with
-``.distinct()`` (src/match.py:118-120); a first version here dedup'd on
-the pair key — a shuffle of EVERY candidate pair, measured 2-3x the whole
-stage cost at reference scale. Instead the join is made duplication-free
-*by construction*: a pair is admitted only in its canonical window (the
-earliest window containing both years) and its canonical venue tag (the
-alphabetically first tag both sides share), both checked as cheap
-post-join predicates. Every quadratic-size shuffle disappears; each pair
-is scored exactly once.
+* both years lie in ``[lower, upper]``,
+* ``|ya - yb| <= N``, and
+* ``upper - lower >= N`` (some window fits in the range at all).
 
-The exploded-block-key + equi-join shape follows the standard distributed
-ER blocking literature (e.g. SparkER, EDBT 2019: token/attribute blocking
-as key-explosion + join in Spark).
+(⇒ reads the bounds off ``s``; ⇐ takes ``s = max(lower, max(ya, yb) - N)``.)
+So the window itself is never needed: the left side keys on its own
+``(venue_tag, year)``, the right side explodes to its *partner years*
+``[max(lower, y-N), min(upper, y+N)]``, and the join emits every blocked
+pair once per venue tag both sides contain. The reference dedups with
+``.distinct()`` (src/match.py:118-120); here a pair is admitted only at its
+canonical tag (the alphabetically first shared tag), a cheap post-join
+predicate, so no quadratic-size dedup shuffle exists and each pair is
+scored exactly once. When ``upper - lower < N`` no window fits and the
+loop forms no block, so the result is empty.
+
+The exploded-key + equi-join shape follows the standard distributed ER
+blocking literature (e.g. SparkER, EDBT 2019: token/attribute blocking as
+key-explosion + join in Spark).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 YEAR_LOWER_BOUND = 1995
@@ -40,38 +41,10 @@ YEAR_UPPER_BOUND = 2004
 DEFAULT_WINDOW = 3
 
 
-def with_block_keys(
-    df: DataFrame,
-    venues: list[str],
-    year_col: str = "year",
-    venue_col: str = "venue",
-    lower: int = YEAR_LOWER_BOUND,
-    upper: int = YEAR_UPPER_BOUND,
-    window: int = DEFAULT_WINDOW,
-) -> DataFrame:
-    """Explode each record to its ``(venue_tag, window_start)`` block keys.
-
-    A record with year ``y`` belongs to every window ``[s, s+window]`` with
-    ``lower <= s <= upper - window`` and ``s <= y <= s + window``, i.e.
-    ``s ∈ [max(lower, y-window), min(upper-window, y)]`` — mirroring the
-    reference's loop bounds (src/match.py:102-115: ``range(lower, upper)``
-    with a break once ``s + window > upper``).
-    """
-    year = F.col(year_col)
-    venue = F.col(venue_col)
-
+def _venue_tags(venue: Column, venues: list[str]) -> Column:
+    """The sorted list of ``venues`` the venue string contains."""
     tags = F.array(*[F.when(venue.contains(v), F.lit(v)) for v in sorted(venues)])
-    tags = F.filter(tags, lambda t: t.isNotNull())
-
-    w_lo = F.greatest(F.lit(lower), year - F.lit(window))
-    w_hi = F.least(F.lit(upper - window), year)
-
-    return (
-        df.filter(year.between(lower, upper) & (F.size(tags) > 0))
-        .withColumn("venue_tags", tags)
-        .withColumn("venue_tag", F.explode(tags))
-        .withColumn("window_start", F.explode(F.sequence(w_lo, w_hi)))
-    )
+    return F.filter(tags, lambda t: t.isNotNull())
 
 
 def candidate_pairs(
@@ -88,46 +61,57 @@ def candidate_pairs(
     upper: int = YEAR_UPPER_BOUND,
     window: int | None = DEFAULT_WINDOW,
 ) -> DataFrame:
-    """Generate candidate pairs.
+    """Generate candidate pairs: every ``(left, right)`` row pair the
+    reference loop blocks together, each exactly once, with the columns of
+    both inputs.
 
     ``window=None`` -> exhaustive cross join (the reference's unblocked
-    baseline, src/match.py:93-95). Otherwise the exploded-key equi-join,
-    deduplicated on the pair key.
+    baseline, src/match.py:93-95). Otherwise the partner-year equi-join of
+    the module docstring: left rows key on ``(venue_tag, year)``, right
+    rows explode to ``(venue_tag, partner_year)``, and a pair sharing
+    several tags is kept at the first. An empty result when
+    ``upper - lower < window``: no window fits in the year range.
+
+    The right side is the probe side. When its input is one partition (a
+    single small file), all O(pairs) scoring would land on one task, so it
+    is spread by ``right_id`` BEFORE the partner-year explode: the shuffle
+    then carries one row per record and venue tag instead of 2N+1. A
+    well-partitioned input skips the forced exchange and AQE sizes the
+    join shuffle instead.
     """
     if window is None:
         return left.crossJoin(right)
+    if window < 0:
+        raise ValueError(f"window must be >= 0 or None, got {window}")
+    if upper - lower < window:
+        return left.crossJoin(right).limit(0)
 
-    lk = with_block_keys(
-        left, venues, year_col_left, venue_col_left, lower, upper, window
-    )
-    rk = with_block_keys(
-        right, venues, year_col_right, venue_col_right, lower, upper, window
-    )
-    # Spread the probe side ONLY when its input partitioning is actually
-    # degenerate (single small file -> one partition; the build side
-    # broadcasts, so all O(pairs) scoring would land on one task). A
-    # well-partitioned cluster-scale input skips the forced exchange
-    # entirely and AQE sizes the join shuffle instead — no hard width is
-    # imposed on a healthy plan.
-    spark = left.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if left.rdd.getNumPartitions() < max(2, target // 4):
-        lk = lk.repartition(target, "venue_tag", "window_start", left_id)
-    lk = lk.withColumnRenamed("venue_tags", "__l_tags")
-    rk = rk.withColumnRenamed("venue_tags", "__r_tags")
-
-    joined = lk.join(rk, on=["venue_tag", "window_start"])
-
-    # duplication-free admission: canonical window = earliest window
-    # containing both years; canonical tag = first shared venue tag
     yl, yr = F.col(year_col_left), F.col(year_col_right)
-    canonical_window = F.greatest(F.lit(lower), F.greatest(yl, yr) - F.lit(window))
-    shared_tags = F.array_intersect(F.col("__l_tags"), F.col("__r_tags"))
-    canonical_tag = F.array_min(shared_tags)
+    l_tags = _venue_tags(F.col(venue_col_left), venues)
+    r_tags = _venue_tags(F.col(venue_col_right), venues)
+
+    lk = left.filter(yl.between(lower, upper) & (F.size(l_tags) > 0)).select(
+        "*", l_tags.alias("__l_tags"), F.explode(l_tags).alias("__l_tag")
+    )
+    rk = right.filter(yr.between(lower, upper) & (F.size(r_tags) > 0)).select(
+        "*", r_tags.alias("__r_tags"), F.explode(r_tags).alias("__r_tag")
+    )
+    target = right.sparkSession.sparkContext.defaultParallelism
+    if right.rdd.getNumPartitions() < max(2, target // 4):
+        rk = rk.repartition(target, right_id)
+    partner_years = F.sequence(
+        F.greatest(F.lit(lower), yr - F.lit(window)),
+        F.least(F.lit(upper), yr + F.lit(window)),
+    )
+    rk = rk.withColumn("__r_year", F.explode(partner_years))
+
+    canonical_tag = F.array_min(F.array_intersect("__l_tags", "__r_tags"))
     return (
-        joined.filter(
-            (F.col("window_start") == canonical_window)
-            & (F.col("venue_tag") == canonical_tag)
+        lk.join(
+            rk,
+            (lk["__l_tag"] == rk["__r_tag"])
+            & (lk[year_col_left] == rk["__r_year"]),
         )
-        .drop("venue_tag", "window_start", "__l_tags", "__r_tags")
+        .filter(F.col("__l_tag") == canonical_tag)
+        .drop("__l_tags", "__l_tag", "__r_tags", "__r_tag", "__r_year")
     )

@@ -2,10 +2,17 @@
 
 Operates on a prefixed pair DataFrame (columns ``{l}_authors``,
 ``{l}_title``, ``{l}_num_authors``, ``{l}_venue`` and the ``{r}_*`` twins).
-The filter order — venue agreement first, then Levenshtein band, then the
-match rule, then Jaccard — matches the reference's manual expression
-ordering; since each filter precedes the projection it depends on, Catalyst
-preserves the cheap-before-expensive evaluation.
+
+Catalyst does not order predicates by cost. It pushes these filters into
+the blocking join's condition in the order written, ahead of blocking's
+own canonical-tag check (operators/blocking.py), so that check cannot
+shield the DP. What does is the first filter: venue agreement plus two
+conditions the match rule implies, equal author counts (every band
+requires it; the planner turns it into an extra equi-join key) and an
+author-length gap below ``max_levenshtein`` (a lower bound on the
+distance). Both are exact, so rows and scores are unchanged while the DP,
+and the title splits after it, run only on pairs the rule can still
+accept.
 """
 
 from __future__ import annotations
@@ -28,13 +35,18 @@ def score_and_match(
     max_levenshtein: int = 10,
     min_jaccard: float = 0.6,
 ) -> DataFrame:
-    """Filter venue-agreeing pairs, score author Levenshtein (-> ``scores``),
-    apply the three-band rule, score title Jaccard (-> ``title_jaccard_sim``)
-    and keep pairs above threshold."""
+    """Filter venue-agreeing pairs the rule can accept, score author
+    Levenshtein (-> ``scores``), apply the three-band rule, score title
+    Jaccard (-> ``title_jaccard_sim``) and keep pairs above threshold."""
     l, r = left_prefix, right_prefix
     venues = DEFAULT_VENUES if venues is None else venues
 
     same_venue = both_contain(f"{l}_venue", f"{r}_venue", venues)
+    # necessary conditions of the band filter + match rule below, ahead of
+    # the DP: every band needs equal author counts, and a distance below
+    # max_levenshtein needs a length gap below it
+    same_count = F.col(f"{l}_num_authors") == F.col(f"{r}_num_authors")
+    length_gap = F.abs(F.length(f"{l}_authors") - F.length(f"{r}_authors"))
     # bounded levenshtein: the band filter below keeps scores in
     # [0, max_levenshtein), so the DP can early-exit at max_levenshtein - 1
     # (distances past the bound report -1 and are filtered) — same kept
@@ -42,7 +54,7 @@ def score_and_match(
     scores = F.levenshtein(f"{l}_authors", f"{r}_authors", max_levenshtein - 1)
 
     scored = (
-        pairs.filter(same_venue)
+        pairs.filter(same_venue & same_count & (length_gap < max_levenshtein))
         .withColumn(SCORE_COL, scores)
         .filter(F.col(SCORE_COL) >= 0)
         .filter(

@@ -13,7 +13,8 @@ executors, and the watermark + interval condition let Spark evict
 buffered rows once no future match can land — state is bounded by
 ``watermark + within`` per key regardless of stream length. Everything is
 built-in stream-stream join machinery; the match predicates are the exact
-Column expressions the batch pipeline uses (functions/similarity.py), so
+Column expressions the batch pipeline uses (functions/similarity.py; the
+publication matcher calls the batch ``score_and_match`` itself), so
 batch and streaming agree row-for-row on the same data (tested against
 the batch twin in tests/test_streaming_er.py).
 """
@@ -40,7 +41,7 @@ def streaming_candidate_pairs(
     """Blocked candidate pairs from two record streams.
 
     Equi-join on ``block_cols`` (the blocking predicate — same role as the
-    batch exploded-block-key join, operators/blocking.py) restricted to
+    batch partner-year join, operators/blocking.py) restricted to
     right-side records whose event time falls in
     ``[left.ts, left.ts + within]``. Output columns are prefixed
     ``{left_prefix}_`` / ``{right_prefix}_``; the block columns keep both
@@ -122,20 +123,19 @@ def streaming_match_publications(
     max_levenshtein: int = 10,
     min_jaccard: float = 0.6,
 ) -> DataFrame:
-    """Streaming twin of the batch publication matcher
-    (operators/matching.py score_and_match): block on ``year``, then the
-    reference's exact predicate chain — venue agreement, bounded author
-    Levenshtein, three-band match rule, title Jaccard threshold.
+    """Streaming twin of the batch publication matcher: block on ``year``,
+    then run the batch predicate chain itself
+    (operators/matching.py score_and_match) — venue agreement and the
+    rule-implied prefilters, bounded author Levenshtein, three-band match
+    rule, title Jaccard threshold.
 
     Inputs are cleaned publication streams with at least
     (id, title, authors, year, venue, num_authors, ts). Emits matched
     pairs with the batch matcher's column contract
     (a_id, b_id, scores, title_jaccard_sim).
     """
-    from ..functions.similarity import both_contain, match_rule, token_jaccard
-    from ..operators.matching import DEFAULT_VENUES
+    from ..operators.matching import score_and_match
 
-    venues = DEFAULT_VENUES if venues is None else venues
     pairs = streaming_candidate_pairs(
         left,
         right,
@@ -145,19 +145,15 @@ def streaming_match_publications(
         left_watermark=watermark,
         right_watermark=watermark,
     )
-    scores = F.levenshtein("a_authors", "b_authors", max_levenshtein - 1)
-    return (
-        pairs.filter(both_contain("a_venue", "b_venue", venues))
-        .withColumn("scores", scores)
-        .filter(F.col("scores") >= 0)
-        .filter(match_rule("scores", "a_num_authors", "b_num_authors", max_levenshtein))
-        .withColumn("title_jaccard_sim", token_jaccard("a_title", "b_title"))
-        .filter(F.col("title_jaccard_sim") >= min_jaccard)
-        .select(
-            "a_id", "b_id", "scores", "title_jaccard_sim",
-            F.col(f"a_{ts_col}").alias("a_ts"),
-            F.col(f"b_{ts_col}").alias("b_ts"),
-        )
+    return score_and_match(
+        pairs,
+        venues=venues,
+        max_levenshtein=max_levenshtein,
+        min_jaccard=min_jaccard,
+    ).select(
+        "a_id", "b_id", "scores", "title_jaccard_sim",
+        F.col(f"a_{ts_col}").alias("a_ts"),
+        F.col(f"b_{ts_col}").alias("b_ts"),
     )
 
 

@@ -43,7 +43,9 @@ def test_full_match_equals_oracle(spark, cleaned, fixture_paths):
     assert len(expected) > 15  # fixture actually plants matches
 
 
-@pytest.mark.parametrize("window", [1, 3, 5])
+# window 12 is wider than the 1995-2004 range: no window fits and the
+# reference loop forms no block at all
+@pytest.mark.parametrize("window", [1, 3, 5, 12])
 def test_blocked_match_equals_oracle(spark, cleaned, fixture_paths, window):
     _, _, recs_a, recs_b = fixture_paths
     a, b = cleaned

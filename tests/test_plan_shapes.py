@@ -254,3 +254,73 @@ def test_adaptive_oracle_equals_static_at_gate_scale():
     assert _near_dup_adaptive_sql(SF) == spec.sql == _near_dup_oracle_sql(4, 4)
     # above the band the generator must actually move the plane count
     assert _near_dup_oracle_sql(5, 4) != spec.sql
+
+
+def _plan_nodes(plan: str) -> list[tuple[int, str]]:
+    """``(depth, text)`` of each node line of a physical-plan tree string;
+    lines that continue a multi-line expression are skipped."""
+    import re
+
+    nodes = []
+    for i, line in enumerate(plan.splitlines()):
+        m = re.match(r"^((?:   |:  )*)(?:\+- |:- )(.*)", line)
+        if m:
+            nodes.append((len(m.group(1)) // 3 + 1, m.group(2)))
+        elif i == 0:
+            nodes.append((0, line))
+    return nodes
+
+
+def test_blocked_match_join_shape(spark, tmp_path):
+    """The blocked match join emits each candidate once: the pair join's
+    equi-keys are (venue tag, partner year) plus the author count the match
+    rule implies, no window key exists, and the probe side is spread
+    before its partner-year explode (the shuffle carries one row per record
+    and venue tag, not 2N+1)."""
+    import re
+
+    from pyspark_entity_resolution_spark.pipeline import (
+        ERConfig,
+        match_publications,
+        prepare_publications,
+    )
+
+    from .er_fixture import write_fixture
+
+    path_a, path_b, _, _ = write_fixture(str(tmp_path))
+    cfg = ERConfig()
+    a = prepare_publications(spark, path_a, cfg)
+    b = prepare_publications(spark, path_b, cfg)
+    matched = match_publications(a, b, cfg)
+    matched.collect()
+    plan = matched._jdf.queryExecution().executedPlan().toString()
+    assert "window_start" not in plan
+    final = plan.split("== Initial Plan ==")[0]
+
+    join = re.search(r"(\w+Join) \[([^\]]*)\], \[([^\]]*)\], Inner, (\w+)", final)
+    assert join, final
+    kind, left_keys, right_keys, build = join.groups()
+    assert "a_year" in left_keys and "a_num_authors" in left_keys, join.group(0)
+    assert "__r_year" in right_keys and "b_num_authors" in right_keys, join.group(0)
+
+    nodes = _plan_nodes(final)
+    gen = [i for i, (_, t) in enumerate(nodes) if "Generate explode(sequence(" in t]
+    assert len(gen) == 1, final
+    depth = nodes[gen[0]][0]
+    ancestors, d = [], depth
+    for k in range(gen[0] - 1, -1, -1):
+        if nodes[k][0] < d:
+            ancestors.append(nodes[k][1])
+            d = nodes[k][0]
+    below = []
+    for k in range(gen[0] + 1, len(nodes)):
+        if nodes[k][0] <= depth:
+            break
+        below.append(nodes[k][1])
+    # the partner-year explode is on the probe side, not broadcast ...
+    assert not any("BroadcastExchange" in t for t in ancestors), ancestors
+    if kind == "BroadcastHashJoin":
+        assert build == "BuildLeft", join.group(0)
+    # ... and sits above the spread exchange
+    exchanges = [t for t in below if t.startswith("Exchange ")]
+    assert exchanges and "REPARTITION" in exchanges[0], below

@@ -1,5 +1,6 @@
 """Property tests: token_jaccard vs Python set-Jaccard, vector ops vs
-numpy, on randomized inputs (batched through Spark in one pass)."""
+numpy, score_and_match vs the brute-force pair oracle, on randomized
+inputs (batched through Spark in one pass)."""
 
 import math
 import re
@@ -10,6 +11,10 @@ from pyspark.sql import functions as F
 
 from pyspark_entity_resolution_spark.functions.similarity import token_jaccard
 from pyspark_entity_resolution_spark.functions.vectors import cosine, dot, l2_norm
+from pyspark_entity_resolution_spark.operators.matching import score_and_match
+
+from .er_fixture import _jaccard, _levenshtein, _pair_matches
+from .reference_semantics import oracle_num_authors
 
 words = st.lists(
     st.sampled_from(["alpha", "beta", "gamma", "delta", "x", "yy", "zzz", "42"]),
@@ -62,3 +67,83 @@ def test_vector_ops_match_numpy(spark, pairs):
             assert abs(r["cos"] - float(np.dot(a, b)) / (na * nb)) < 1e-9
         else:
             assert r["cos"] is None or math.isnan(r["cos"]) or math.isinf(r["cos"])
+
+
+NAMES = ["alice smith", "bob jones", "carol chen", "erin müller", "dave kim"]
+author_lists = st.lists(st.sampled_from(NAMES), min_size=1, max_size=3).map(", ".join)
+any_authors = st.one_of(st.none(), st.just(""), author_lists)
+titles = words.map(" ".join)
+venues = st.sampled_from(["sigmod conf", "vldb j", "icde", "the vldb+sigmod workshop"])
+# author-length gaps of 9 (a distance the band keeps) and 10 (one it drops)
+# straddle the length prefilter's bound
+EDGE_PAIRS = [
+    ("alice smith", 1, "alice smith" + "x" * 9, 1),
+    ("alice smith", 1, "alice smith" + "x" * 10, 1),
+    ("", 1, "", 1),  # empty authors count as one author
+    (None, 0, None, 0),
+    ("alice smith, bob jones", 2, "alice smith, bob jones", 1),
+]
+
+
+@st.composite
+def author_pairs(draw):
+    a = draw(any_authors)
+    how = draw(st.sampled_from(["same", "gap9", "gap10", "typo", "fresh"]))
+    base = a or ""
+    b = {
+        "same": a,
+        "gap9": base + "x" * 9,
+        "gap10": base + "x" * 10,
+        "typo": base[:-1] + "q",
+        "fresh": None,
+    }[how]
+    if how == "fresh":
+        b = draw(any_authors)
+    if draw(st.booleans()):
+        a, b = b, a
+    # author counts as cleaning derives them, or arbitrary (unequal) ones
+    na = draw(st.one_of(st.just(oracle_num_authors(a)), st.integers(0, 3)))
+    nb = draw(st.one_of(st.just(oracle_num_authors(b)), st.integers(0, 3)))
+    return a, na, b, nb
+
+
+@st.composite
+def record_pairs(draw):
+    a_auth, na, b_auth, nb = draw(author_pairs())
+    ta, va = draw(titles), draw(venues)
+    tb = draw(st.one_of(st.just(ta), titles))
+    vb = draw(st.one_of(st.just(va), venues))
+    return (ta, a_auth, va, na), (tb, b_auth, vb, nb)
+
+
+@settings(max_examples=6, deadline=None)
+@given(st.lists(record_pairs(), min_size=1, max_size=40))
+def test_score_and_match_equals_pair_oracle(spark, pairs):
+    pairs = pairs + [
+        (("x y z", a, "vldb j", na), ("x y z", b, "vldb", nb))
+        for a, na, b, nb in EDGE_PAIRS
+    ]
+    side = "pid int, {p}_title string, {p}_authors string, {p}_venue string, {p}_num_authors int"
+    a = spark.createDataFrame([(i, *ra) for i, (ra, _) in enumerate(pairs)], side.format(p="a"))
+    b = spark.createDataFrame([(i, *rb) for i, (_, rb) in enumerate(pairs)], side.format(p="b"))
+    # a join, as in the pipeline: the count equality becomes a join key there
+    got = {
+        r["pid"]: (r["scores"], r["title_jaccard_sim"])
+        for r in score_and_match(a.join(b, "pid")).collect()
+    }
+
+    expected = {}
+    for i, (ra, rb) in enumerate(pairs):
+        da, db = (
+            dict(zip(["title", "authors", "venue", "num_authors"], r)) for r in (ra, rb)
+        )
+        if _pair_matches(da, db):
+            expected[i] = (
+                _levenshtein(da["authors"], db["authors"]),
+                _jaccard(da["title"], db["title"]),
+            )
+    assert got.keys() == expected.keys()
+    for i, (score, jac) in expected.items():
+        assert got[i][0] == score and abs(got[i][1] - jac) < 1e-12, pairs[i]
+    n = len(pairs)
+    assert {n - 5, n - 3} <= got.keys() and not {n - 4, n - 2, n - 1} & got.keys()
