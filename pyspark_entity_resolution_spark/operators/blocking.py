@@ -72,12 +72,12 @@ def candidate_pairs(
     several tags is kept at the first. An empty result when
     ``upper - lower < window``: no window fits in the year range.
 
-    The right side is the probe side. When its input is one partition (a
-    single small file), all O(pairs) scoring would land on one task, so it
-    is spread by ``right_id`` BEFORE the partner-year explode: the shuffle
-    then carries one row per record and venue tag instead of 2N+1. A
-    well-partitioned input skips the forced exchange and AQE sizes the
-    join shuffle instead.
+    The exploded right side is the probe side when the left broadcasts.
+    When its input has few partitions (a single small file gives one), all
+    O(pairs) scoring would land on a few tasks, so it is spread by
+    ``right_id`` BEFORE the partner-year explode: the shuffle then carries
+    one row per record and venue tag instead of 2N+1. A well-partitioned
+    input skips the forced exchange and AQE sizes the join shuffle instead.
     """
     if window is None:
         return left.crossJoin(right)
